@@ -1,6 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{floor, lit}
 import org.apache.spark.sql.graftshim.ColumnBridge
 
 /** Column-API surface of the native kernel expressions. */
@@ -31,6 +32,14 @@ object Kernels {
     */
   def toDecimal(c: Column, precision: Int, scale: Int): Column =
     ColumnBridge.column(DoubleToDecimalExpr(ColumnBridge.expression(c), precision, scale))
+
+  /** `floor(c * scale) / scale`: snaps a double down onto the
+    * 1/scale grid (1e6 or 1e12 in practice). Pure IEEE ops, so every
+    * engine — DuckDB included — lands on the same grid point; this is
+    * the quantizer applied before decimal casts (SURVEY.md §5).
+    */
+  def floorGrid(c: Column, scale: Double): Column =
+    floor(c * lit(scale)) / lit(scale)
 
   /** The k-th deterministic uniform of a digest-seeded splitmix64
     * stream (see [[SplitMixUniformExpr]]); seedHex is a 32-hex md5

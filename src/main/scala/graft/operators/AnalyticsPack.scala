@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.expressions.Kernels.floorGrid
 
 /** Spark twins of the reference's documented gold analytics pack
   * (`docs/queries/01-05`) — the warehouse's own showcase of what it
@@ -355,7 +356,6 @@ object AnalyticsPack {
     import org.apache.spark.sql.types.DecimalType
     require(periods.nonEmpty && periods.forall(_ >= 2), s"bad periods: $periods")
     val d6 = DecimalType(28, 6)
-    def q6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
     val byDay = validEvents.filter(col("date_sk").isNotNull)
       .groupBy(col("date_sk"))
       .agg(coalesce(round(sum(money(col("value"))), 2), lit(0))
@@ -373,8 +373,8 @@ object AnalyticsPack {
     val twoPi = 2.0 * math.Pi
     periods.map { p =>
       val ang = lit(twoPi) * col("__idx") / lit(p.toDouble)
-      val ct = q6(q6(cos(ang)) * col("__yc")).cast(d6)
-      val st = q6(q6(sin(ang)) * col("__yc")).cast(d6)
+      val ct = floorGrid(floorGrid(cos(ang), 1e6) * col("__yc"), 1e6).cast(d6)
+      val st = floorGrid(floorGrid(sin(ang), 1e6) * col("__yc"), 1e6).cast(d6)
       base.agg(max(col("n_days")).as("n_days"),
           coalesce(sum(ct), lit(0).cast(d6)).as("__c"),
           coalesce(sum(st), lit(0).cast(d6)).as("__s"))
@@ -414,8 +414,7 @@ object AnalyticsPack {
     import org.apache.spark.sql.types.DecimalType
     require(windows.nonEmpty && windows.forall(_ >= 4), s"bad windows: $windows")
     val d6 = DecimalType(28, 6)
-    def q6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
-    def q8d(c: Column) = (floor(c * lit(1e8)) / lit(1e8)).cast(DecimalType(28, 8))
+    def q8d(c: Column) = floorGrid(c, 1e8).cast(DecimalType(28, 8))
     val byDay = validEvents.filter(col("date_sk").isNotNull)
       .groupBy(col("date_sk"))
       .agg(coalesce(round(sum(money(col("value"))), 2), lit(0))
@@ -436,7 +435,7 @@ object AnalyticsPack {
       val stats = full.groupBy(col("__b"))
         .agg((sum(graft.expressions.Kernels.toDecimal(col("y"), 28, 6))
             .cast("double") / lit(wSize.toDouble)).as("__m"),
-          ((sum(q6(col("y") * col("y")).cast(d6)).cast("double")
+          ((sum(floorGrid(col("y") * col("y"), 1e6).cast(d6)).cast("double")
             - sum(graft.expressions.Kernels.toDecimal(col("y"), 28, 6))
               .cast("double")
               * sum(graft.expressions.Kernels.toDecimal(col("y"), 28, 6))
@@ -455,15 +454,15 @@ object AnalyticsPack {
         .filter(col("__var") > 0.0)
         .withColumn("__rs", col("__r") / sqrt(col("__var")))
       rs.agg(count(lit(1)).as("n_blocks"),
-          coalesce(sum(q6(col("__rs")).cast(d6)), lit(0).cast(d6)).as("__srs"))
+          coalesce(sum(floorGrid(col("__rs"), 1e6).cast(d6)), lit(0).cast(d6)).as("__srs"))
         .select(lit(wSize).as("window_days"), col("n_blocks"),
           when(col("n_blocks") > 0,
             col("__srs").cast("double") / col("n_blocks").cast("double"))
             .as("mean_rs"))
     }.reduce(_ unionAll _).ckptPartitioned()
     val pts = perW.filter(col("n_blocks") > 0 && col("mean_rs") > 0.0)
-      .select(q6(log(col("window_days").cast("double"))).as("lx"),
-        q6(log(col("mean_rs"))).as("ly"))
+      .select(floorGrid(log(col("window_days").cast("double")), 1e6).as("lx"),
+        floorGrid(log(col("mean_rs")), 1e6).as("ly"))
     val moms = pts.agg(count(lit(1)).as("__k"),
       sum(q8d(col("lx"))).as("sx"), sum(q8d(col("ly"))).as("sy"),
       sum(q8d(col("lx") * col("ly"))).as("sxy"),
@@ -497,7 +496,6 @@ object AnalyticsPack {
     import org.apache.spark.sql.types.DecimalType
     require(pLo >= 0 && pHi <= 1 && pLo < pHi, s"bad trim bracket [$pLo, $pHi]")
     val d6 = DecimalType(28, 6)
-    def q6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
     val base = events
       .select(groupExpr.as("__g"), col(valueCol).cast("double").as("__v"))
       .filter(col("__v").isNotNull)
@@ -509,7 +507,7 @@ object AnalyticsPack {
       .ckptPartitioned()
     val raw = base.groupBy(col("__g"))
       .agg(count(lit(1)).as("n_total"),
-        sum(q6(col("__v")).cast(d6)).as("__rs"))
+        sum(floorGrid(col("__v"), 1e6).cast(d6)).as("__rs"))
     // brackets/kept are ≤|groups| panels off stats-less checkpoints —
     // broadcast explicitly or the static plan degrades to SMJ
     raw.join(broadcast(brackets), Seq("__g"))
@@ -517,7 +515,7 @@ object AnalyticsPack {
           .filter(col("__v") >= col("q_lo") && col("__v") <= col("q_hi"))
           .groupBy(col("__g"))
           .agg(count(lit(1)).as("__nk"),
-            sum(q6(col("__v")).cast(d6)).as("__ts"))),
+            sum(floorGrid(col("__v"), 1e6).cast(d6)).as("__ts"))),
         Seq("__g"), "left")
       // LEFT join: a tiny group whose interpolated bracket straddles
       // every row (e.g. n=2) still surfaces, with n_kept=0 and a NULL
@@ -1011,9 +1009,8 @@ object AnalyticsPack {
       .agg(count(lit(1)).as("n_clicks"),
         min(struct(col("click_ts"), col("click_id"))).as("first_c"),
         max(struct(col("click_ts"), col("click_id"))).as("last_c"))
-    val g6 = (c: Column) => floor(c * lit(1e6)) / lit(1e6)
     val credit6 = graft.expressions.Kernels.toDecimal(
-      g6(col("p_val").cast("double") / col("n_clicks").cast("double")), 28, 6)
+      floorGrid(col("p_val").cast("double") / col("n_clicks").cast("double"), 1e6), 28, 6)
     val linear = pairs.join(perP.select(col("p_id"), col("n_clicks")), "p_id")
       .select(lit("linear").as("model"), col("click_ts"),
         credit6.as("credit"))
@@ -1259,7 +1256,6 @@ object AnalyticsPack {
   def markovEntropyRate(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val d6 = DecimalType(28, 6)
-    def q6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
     val tm = transitionMatrix(events).ckptPartitioned()
     val states = tm.select(col("from_type").as("s"))
       .unionAll(tm.select(col("to_type").as("s")))
@@ -1267,13 +1263,13 @@ object AnalyticsPack {
     val tot = tm.agg(sum(col("n")).as("__nt"))
     val h = tm.crossJoin(broadcast(tot))
       .agg(
-        coalesce(sum(q6((col("n").cast("double") / col("__nt").cast("double"))
-          * q6(log(col("p")))).cast(d6)), lit(0).cast(d6)).as("__h"),
+        coalesce(sum(floorGrid((col("n").cast("double") / col("__nt").cast("double"))
+          * floorGrid(log(col("p")), 1e6), 1e6).cast(d6)), lit(0).cast(d6)).as("__h"),
         max(col("__nt")).as("n_transitions"))
     h.crossJoin(broadcast(states))
       .select(col("n_transitions"), col("n_states"),
         (-col("__h").cast("double")).as("entropy_rate_nats"))
-      .withColumn("perplexity", q6(exp(col("entropy_rate_nats"))))
+      .withColumn("perplexity", floorGrid(exp(col("entropy_rate_nats")), 1e6))
   }
 
   /** Top-N days per group by daily volume via DENSE_RANK (ties all
@@ -1380,7 +1376,6 @@ object AnalyticsPack {
     */
   def seasonalStrength(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    def q6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
     val d = seasonalDecompose(events)
       .filter(col("trend").isNotNull)
       .select(col("residual").as("r"),
@@ -1391,20 +1386,20 @@ object AnalyticsPack {
     // decimal partials past 2^53 micro-units at 10× data, where the
     // two engines' decimal→double casts drift an ulp (§5)
     val means = d.agg(
-      round(dec6ToDouble(sum(graft.expressions.Kernels.toDecimal(q6(col("r")), 28, 6)))
+      round(dec6ToDouble(sum(graft.expressions.Kernels.toDecimal(floorGrid(col("r"), 1e6), 28, 6)))
         / count(lit(1)), 4).as("mr"),
-      round(dec6ToDouble(sum(graft.expressions.Kernels.toDecimal(q6(col("sr")), 28, 6)))
+      round(dec6ToDouble(sum(graft.expressions.Kernels.toDecimal(floorGrid(col("sr"), 1e6), 28, 6)))
         / count(lit(1)), 4).as("msr"),
-      round(dec6ToDouble(sum(graft.expressions.Kernels.toDecimal(q6(col("tr")), 28, 6)))
+      round(dec6ToDouble(sum(graft.expressions.Kernels.toDecimal(floorGrid(col("tr"), 1e6), 28, 6)))
         / count(lit(1)), 4).as("mtr"),
       count(lit(1)).as("n_days"))
     val v = d.crossJoin(broadcast(means)).agg(
       first(col("n_days")).as("n_days"),
-      (dec6ToDouble(sum(graft.expressions.Kernels.toDecimal(q6((col("r") - col("mr")) * (col("r") - col("mr"))), 28, 6)))
+      (dec6ToDouble(sum(graft.expressions.Kernels.toDecimal(floorGrid((col("r") - col("mr")) * (col("r") - col("mr")), 1e6), 28, 6)))
         / first(col("n_days"))).as("var_r"),
-      (dec6ToDouble(sum(graft.expressions.Kernels.toDecimal(q6((col("sr") - col("msr")) * (col("sr") - col("msr"))), 28, 6)))
+      (dec6ToDouble(sum(graft.expressions.Kernels.toDecimal(floorGrid((col("sr") - col("msr")) * (col("sr") - col("msr")), 1e6), 28, 6)))
         / first(col("n_days"))).as("var_sr"),
-      (dec6ToDouble(sum(graft.expressions.Kernels.toDecimal(q6((col("tr") - col("mtr")) * (col("tr") - col("mtr"))), 28, 6)))
+      (dec6ToDouble(sum(graft.expressions.Kernels.toDecimal(floorGrid((col("tr") - col("mtr")) * (col("tr") - col("mtr")), 1e6), 28, 6)))
         / first(col("n_days"))).as("var_tr"))
     v.select(col("n_days"), col("var_r"), col("var_sr"), col("var_tr"),
       greatest(lit(0.0), lit(1.0) - col("var_r") /
@@ -1550,7 +1545,6 @@ object AnalyticsPack {
   def medianTest(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val d6 = DecimalType(28, 6)
-    def grid6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
     def nz(c: Column) = when(c === 0.0, lit(null).cast("double")).otherwise(c)
     val ev = events.filter(col("value").isNotNull)
       .select(upper(trim(col("event_type"))).as("event_type_norm"), col("value"))
@@ -1572,10 +1566,10 @@ object AnalyticsPack {
       nz(col("__n").cast("double"))
     val eb = col("__rg").cast("double") * col("__tb").cast("double") /
       nz(col("__n").cast("double"))
-    val termA = grid6((col("n_above").cast("double") - ea) *
-      (col("n_above").cast("double") - ea) / nz(ea))
-    val termB = grid6((col("n_below_eq").cast("double") - eb) *
-      (col("n_below_eq").cast("double") - eb) / nz(eb))
+    val termA = floorGrid((col("n_above").cast("double") - ea) *
+      (col("n_above").cast("double") - ea) / nz(ea), 1e6)
+    val termB = floorGrid((col("n_below_eq").cast("double") - eb) *
+      (col("n_below_eq").cast("double") - eb) / nz(eb), 1e6)
     val chi2 = withTot
       .agg((sum(termA.cast(d6)) + sum(termB.cast(d6))).as("__chi2d"),
         max(col("__k")).as("__kk"))
@@ -1688,7 +1682,6 @@ object AnalyticsPack {
                         variantCol: String, a: String, b: String,
                         convPred: Column, q: Double = 0.05): DataFrame = {
     require(q > 0 && q < 1, s"FDR level must be in (0,1): $q")
-    def grid6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
     def nz(c: Column) = when(c === 0.0, lit(null).cast("double")).otherwise(c)
     val isA = col(variantCol) === a
     val isB = col(variantCol) === b
@@ -1713,7 +1706,7 @@ object AnalyticsPack {
     val pv = panel
       .select(col("segment"), col("n_a"), col("n_b"), col("conv_a"), col("conv_b"),
         rateA.as("rate_a"), rateB.as("rate_b"), z.as("z_score"),
-        grid6(poly * exp(-(x * x))).as("p_value"))
+        floorGrid(poly * exp(-(x * x)), 1e6).as("p_value"))
       .filter(col("p_value").isNotNull)
       .ckptPartitioned()
     val ranked = pv.as("x").join(broadcast(pv.as("y")),
@@ -2125,20 +2118,19 @@ object AnalyticsPack {
     */
   def forecastEvalModels(validEvents: DataFrame): DataFrame = {
     val w = Window.orderBy(col("date_sk"))
-    val g6 = (c: Column) => floor(c * lit(1e6)) / lit(1e6)
     def evalModel(method: String, df: DataFrame): DataFrame = {
       val err = col("actual_next") - col("forecast_next")
       df.select(col("date_sk"), col("daily_value"), col("forecast_next"))
         .withColumn("actual_next", lead(col("daily_value"), 1).over(w))
         .filter(col("actual_next").isNotNull)
         .agg(count(lit(1)).as("n_eval"),
-          (sum(graft.expressions.Kernels.toDecimal(g6(abs(err)), 28, 6))
+          (sum(graft.expressions.Kernels.toDecimal(floorGrid(abs(err), 1e6), 28, 6))
             .cast("double") / count(lit(1))).as("mae"),
-          (sum(graft.expressions.Kernels.toDecimal(g6(err), 28, 6))
+          (sum(graft.expressions.Kernels.toDecimal(floorGrid(err, 1e6), 28, 6))
             .cast("double") / count(lit(1))).as("bias"),
           (sum(when(col("actual_next") =!= 0,
               graft.expressions.Kernels.toDecimal(
-                g6(abs(err) / col("actual_next")), 28, 6)))
+                floorGrid(abs(err) / col("actual_next"), 1e6), 28, 6)))
             .cast("double")
             / sum(when(col("actual_next") =!= 0, 1L))).as("mape"))
         .select(lit(method).as("method"), col("n_eval"), col("mae"),
@@ -2488,13 +2480,12 @@ object AnalyticsPack {
         col("y"), col("m.f").as("f"))
       .filter(col("f").isNotNull)
     val err = col("y") - col("f")
-    val g6 = (c: Column) => floor(c * lit(1e6)) / lit(1e6)
     long.groupBy(col("event_type_norm"), col("method"))
       .agg(count(lit(1)).as("n_eval"),
         (sum(money(abs(err))).cast("double") / count(lit(1))).as("mae"),
         (sum(money(err)).cast("double") / count(lit(1))).as("bias"),
         (sum(when(col("y") =!= 0,
-            graft.expressions.Kernels.toDecimal(g6(abs(err) / col("y")), 28, 6)))
+            graft.expressions.Kernels.toDecimal(floorGrid(abs(err) / col("y"), 1e6), 28, 6)))
           .cast("double")
           / sum(when(col("y") =!= 0, 1L))).as("mape"))
   }
@@ -2534,7 +2525,6 @@ object AnalyticsPack {
   private def acfFromByDay(byDay: DataFrame, maxLag: Int): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     require(maxLag >= 1, s"need at least lag 1: $maxLag")
-    def q6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
     val meanPanel = byDay.groupBy(col("event_type_norm"))
       .agg(round(sum(money(col("y"))).cast("double") / count(lit(1)), 4).as("ybar"))
     val dev = byDay.join(broadcast(meanPanel), Seq("event_type_norm"))
@@ -2542,7 +2532,7 @@ object AnalyticsPack {
         (col("y") - col("ybar")).as("dev"))
       .localCheckpoint(false)
     val den = dev.groupBy(col("event_type_norm"))
-      .agg(dec6ToDouble(sum(q6(col("dev") * col("dev")).cast(DecimalType(28, 6))))
+      .agg(dec6ToDouble(sum(floorGrid(col("dev") * col("dev"), 1e6).cast(DecimalType(28, 6))))
         .as("den"))
     val lagGrid = array((1 to maxLag).map(lit): _*)
     val probes = dev
@@ -2553,7 +2543,7 @@ object AnalyticsPack {
       .join(dev.withColumnRenamed("dev", "dev_tk"), Seq("event_type_norm", "d"))
       .groupBy(col("event_type_norm"), col("lag"))
       .agg(count(lit(1)).as("n_pairs"),
-        dec6ToDouble(sum(q6(col("dev_t") * col("dev_tk")).cast(DecimalType(28, 6))))
+        dec6ToDouble(sum(floorGrid(col("dev_t") * col("dev_tk"), 1e6).cast(DecimalType(28, 6))))
           .as("num"))
     num.join(broadcast(den), Seq("event_type_norm"))
       .select(col("event_type_norm"), col("lag"), col("n_pairs"),
@@ -2585,7 +2575,6 @@ object AnalyticsPack {
     import org.apache.spark.sql.types.DecimalType
     require(maxLag >= 2 && maxLag % 2 == 0,
       s"maxLag must be even for the closed-form chi2 tail: $maxLag")
-    def q12(c: Column) = floor(c * lit(1e12)) / lit(1e12)
     // ONE fact collapse feeds both the ACF panel and the day counts
     val byDay = byDayPanel(validEvents)
     val acf = acfFromByDay(byDay, maxLag)
@@ -2599,8 +2588,8 @@ object AnalyticsPack {
       .filter(col("acf").isNotNull && col("n_days") > col("lag"))
       .groupBy(col("event_type_norm"))
       .agg(count(lit(1)).as("__nl"),
-        sum(q12(col("acf") * col("acf")
-            / (col("n_days") - col("lag")).cast("double"))
+        sum(floorGrid(col("acf") * col("acf")
+            / (col("n_days") - col("lag")).cast("double"), 1e12)
           .cast(DecimalType(28, 12))).as("__s"))
     val qStat = col("n_days").cast("double") *
       (col("n_days") + 2).cast("double") * col("__s").cast("double")
@@ -3217,12 +3206,11 @@ object AnalyticsPack {
     */
   def welchTTest(df: DataFrame, valueCol: String, groupA: Column): DataFrame = {
     val d6 = DecimalType(28, 6)
-    def q6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
-    val v = q6(col(valueCol).cast("double"))
+    val v = floorGrid(col(valueCol).cast("double"), 1e6)
     def side(p: Column, tag: String): Seq[Column] = Seq(
       sum(when(p, 1L).otherwise(0L)).as(s"n_$tag"),
       sum(when(p, v).otherwise(lit(0.0)).cast(d6)).cast("double").as(s"__s_$tag"),
-      sum(when(p, q6(v * v)).otherwise(lit(0.0)).cast(d6)).cast("double").as(s"__ss_$tag"))
+      sum(when(p, floorGrid(v * v, 1e6)).otherwise(lit(0.0)).cast(d6)).cast("double").as(s"__ss_$tag"))
     val cols = side(groupA, "a") ++ side(!groupA, "b")
     val m = df.filter(col(valueCol).isNotNull).agg(cols.head, cols.tail: _*)
     def nz(c: Column): Column =
@@ -3268,13 +3256,12 @@ object AnalyticsPack {
     */
   def anovaF(df: DataFrame, valueCol: String, groupCol: String): DataFrame = {
     val d6 = DecimalType(28, 6)
-    def q6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
-    val v = q6(col(valueCol).cast("double"))
+    val v = floorGrid(col(valueCol).cast("double"), 1e6)
     val groups = df.filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
       .groupBy(col(groupCol).as("__g"))
       .agg(count(lit(1)).as("__n"),
         sum(v.cast(d6)).as("__sdec"),
-        sum(q6(v * v).cast(d6)).as("__ssdec"))
+        sum(floorGrid(v * v, 1e6).cast(d6)).as("__ssdec"))
     def nz(c: Column): Column =
       when(c === 0.0, lit(null).cast("double")).otherwise(c)
     // pure sums stay DECIMAL across both aggregation levels (no
@@ -3284,8 +3271,8 @@ object AnalyticsPack {
     val panel = groups.agg(
       count(lit(1)).as("k_groups"),
       sum(col("__n")).as("n_total"),
-      sum(q6(col("__sdec").cast("double") * col("__sdec").cast("double")
-        / col("__n").cast("double")).cast(d6))
+      sum(floorGrid(col("__sdec").cast("double") * col("__sdec").cast("double")
+        / col("__n").cast("double"), 1e6).cast(d6))
         .cast("double").as("__sum_sg2n"),
       sum(col("__sdec")).cast("double").as("__grand_s"),
       sum(col("__ssdec")).cast("double").as("__grand_ss"))
@@ -3648,15 +3635,14 @@ object AnalyticsPack {
     val gamma = ed / ee
     val rss = dd - ed * ed / ee
     val tStat = gamma / sqrt((rss / (col("n_diffs") - 1).cast("double")) / ee)
-    def grid(c: Column): Column = floor(c * lit(1e6)) / lit(1e6)
     coef.select(col("series_x"), col("series_y"), col("n_days"), col("beta"))
       .join(m2, Seq("series_x", "series_y"), "left")
       .select(col("series_x"), col("series_y"), col("n_days"),
         coalesce(col("n_diffs"), lit(0L)).as("n_diffs"), col("beta"),
         when(col("beta").isNotNull && col("n_diffs") >= 3 && ee =!= 0.0,
-          grid(gamma)).as("gamma"),
+          floorGrid(gamma, 1e6)).as("gamma"),
         when(col("beta").isNotNull && col("n_diffs") >= 3 && ee =!= 0.0
-          && rss > 0.0, grid(tStat)).as("adf_t"))
+          && rss > 0.0, floorGrid(tStat, 1e6)).as("adf_t"))
       .withColumn("coint_5pct",
         when(col("adf_t").isNull, lit(null).cast("boolean"))
           .otherwise(col("adf_t") < -3.33613))
@@ -3727,11 +3713,10 @@ object AnalyticsPack {
     val rssU = ayy - b1 * a1y - b2 * a2y
     val rssR = ayy - a1y * a1y / a11
     val f = (rssR - rssU) * (col("n_days") - 3).cast("double") / rssU
-    def grid(c: Column): Column = floor(c * lit(1e6)) / lit(1e6)
     m.select(col("cause"), col("effect"), col("n_days"),
-        when(col("n_days") >= 4 && det =!= 0.0, grid(b2)).as("b_cause"),
+        when(col("n_days") >= 4 && det =!= 0.0, floorGrid(b2, 1e6)).as("b_cause"),
         when(col("n_days") >= 4 && det =!= 0.0 && a11 =!= 0.0 && rssU > 0.0,
-          grid(f)).as("f_stat"))
+          floorGrid(f, 1e6)).as("f_stat"))
       .withColumn("granger_5pct",
         when(col("f_stat").isNull, lit(null).cast("boolean"))
           .otherwise(col("f_stat") > 3.841459))
@@ -3862,7 +3847,6 @@ object AnalyticsPack {
   def cupedReadout(events: DataFrame, variantCol: String,
                    valueCol: Column, prePred: Column): DataFrame = {
     def nz(c: Column) = when(c === 0.0, lit(null)).otherwise(c)
-    def q6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
     val d4 = DecimalType(28, 4)
     val d6 = DecimalType(28, 6)
     // fact -> per-user panel: one partial-agg shuffle on the user key
@@ -3896,8 +3880,8 @@ object AnalyticsPack {
               / col("__n").cast("double"))).as("theta"))
     // adjusted per-user values on the 1e-6 grid, then per-arm stats
     val adj = users.crossJoin(broadcast(pooled))
-      .withColumn("__ya", q6(col("y").cast("double")
-        - col("theta") * (col("x").cast("double") - col("__mean_x"))))
+      .withColumn("__ya", floorGrid(col("y").cast("double")
+        - col("theta") * (col("x").cast("double") - col("__mean_x")), 1e6))
     adj.groupBy(col("arm"))
       .agg(
         count(lit(1)).as("n_users"),
@@ -3905,7 +3889,7 @@ object AnalyticsPack {
         sum(col("y")).as("__sy"),
         sum((col("y") * col("y")).cast(d4)).as("__syy"),
         sum(col("__ya").cast(d6)).as("__sa"),
-        sum(q6(col("__ya") * col("__ya")).cast(d6)).as("__saa"))
+        sum(floorGrid(col("__ya") * col("__ya"), 1e6).cast(d6)).as("__saa"))
       .select(col("arm"), col("n_users"), col("theta"),
         (decToDouble(col("__sy"), 2) / col("n_users").cast("double")).as("mean_raw"),
         (decToDouble(col("__sa"), 6) / col("n_users").cast("double")).as("mean_adj"),

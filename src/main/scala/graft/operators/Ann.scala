@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.expressions.Kernels
+import graft.expressions.Kernels.floorGrid
 
 /** Approximate / exact nearest-neighbour search over an embedding
   * column (`Array[Float]`).
@@ -73,7 +74,6 @@ object Ann {
     */
   def dimStats(emb: DataFrame, vecCol: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    def q12(c: Column) = floor(c * lit(1e12)) / lit(1e12)
     def nz(c: Column): Column =
       when(c === 0.0, lit(null).cast("double")).otherwise(c)
     val ex = emb.filter(col(vecCol).isNotNull)
@@ -84,8 +84,8 @@ object Ann {
         // float32→double components are exact but FULL-ENTROPY at
         // decimal scale 12 — the cast itself must not round (§5), so
         // grid first (unlike centroids, whose output rounds to 1e-6)
-        sum(q12(col("__v")).cast(DecimalType(28, 12))).as("__s"),
-        sum(q12(col("__v") * col("__v")).cast(DecimalType(28, 12))).as("__ss"),
+        sum(floorGrid(col("__v"), 1e12).cast(DecimalType(28, 12))).as("__s"),
+        sum(floorGrid(col("__v") * col("__v"), 1e12).cast(DecimalType(28, 12))).as("__ss"),
         min(col("__v")).as("min_v"), max(col("__v")).as("max_v"))
       .withColumn("mean_v",
         col("__s").cast("double") / col("n_vectors").cast("double"))
@@ -96,11 +96,11 @@ object Ann {
           / col("n_vectors").cast("double"))
       .ckptPartitioned()
     val tot = panel.agg(
-      sum(q12(col("var_v")).cast(DecimalType(28, 12))).as("__tv"))
+      sum(floorGrid(col("var_v"), 1e12).cast(DecimalType(28, 12))).as("__tv"))
     panel.crossJoin(broadcast(tot))
       .select(col("dim_pos"), col("n_vectors"), col("mean_v"),
         sqrt(col("var_v")).as("std_v"), col("min_v"), col("max_v"),
-        (q12(col("var_v")) / nz(col("__tv").cast("double"))).as("var_share"))
+        (floorGrid(col("var_v"), 1e12) / nz(col("__tv").cast("double"))).as("var_share"))
   }
 
   /** Pairwise cosine-similarity HISTOGRAM over a deterministic probe
@@ -169,17 +169,16 @@ object Ann {
       s"bad LSH configs: $configs")
     require(tau > -1.0 && tau < 1.0, s"tau=$tau outside (-1,1)")
     val d6 = DecimalType(28, 6)
-    def q6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
     def nz(c: Column): Column =
       when(c === 0.0, lit(null).cast("double")).otherwise(c)
     val width = 2.0 / buckets
     val hist = similarityHist(emb, idCol, vecCol, panelK, buckets)
       .withColumn("__mid", col("bucket_lo") + lit(width / 2))
-      .withColumn("__p", q6(lit(1.0) -
-        acos(greatest(lit(-1.0), least(lit(1.0), col("__mid")))) / lit(math.Pi)))
+      .withColumn("__p", floorGrid(lit(1.0) -
+        acos(greatest(lit(-1.0), least(lit(1.0), col("__mid")))) / lit(math.Pi), 1e6))
       .ckptPartitioned()
     configs.map { case (b, r) =>
-      val pc = q6(lit(1.0) - pow(lit(1.0) - pow(col("__p"), lit(r)), lit(b)))
+      val pc = floorGrid(lit(1.0) - pow(lit(1.0) - pow(col("__p"), lit(r)), lit(b)), 1e6)
       val term = col("n_pairs").cast(DecimalType(19, 0)) * pc.cast(d6)
       hist.agg(
           sum(col("n_pairs")).as("n_pairs_total"),
@@ -468,7 +467,6 @@ object Ann {
   def kmeansSilhouette(emb: DataFrame, idCol: String, vecCol: String,
                        k: Int, rounds: Int = 5): DataFrame = {
     val d28 = org.apache.spark.sql.types.DecimalType(28, 6)
-    def grid6(c: Column): Column = floor(c * lit(1e6)) / lit(1e6)
     val (base, cents) = kmeansCents(emb, idCol, vecCol, k, rounds)
     val alld = base.crossJoin(broadcast(cents))
       .withColumn("d2f", dot(col("c"), col("c"))
@@ -484,9 +482,9 @@ object Ann {
       .filter(col("cid") =!= col("cluster_id"))
       .groupBy(col("vec_id"), col("cluster_id"), col("a_dist"))
       .agg(min(col("dist")).as("b_dist"))
-    val s = grid6((col("b_dist") - col("a_dist")) /
+    val s = floorGrid((col("b_dist") - col("a_dist")) /
       when(greatest(col("a_dist"), col("b_dist")) === 0.0, lit(null))
-        .otherwise(greatest(col("a_dist"), col("b_dist"))))
+        .otherwise(greatest(col("a_dist"), col("b_dist"))), 1e6)
     oth.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("n_members"),
         (sum(s.cast(d28)).cast("double") / count(lit(1)))
@@ -847,14 +845,13 @@ object Ann {
     // divide are plain IEEE ops both execute bit-identically, and a
     // grid-aligned value sits ~1e-22 from its decimal point — no
     // rounding decision left to disagree on.
-    def grid6(c: Column): Column = floor(c * lit(1e6)) / lit(1e6)
     val gramHalf = centered
       .select(posexplode(col("cvarr")).as(Seq("gi", "cvi")), col("cvarr"))
       .select(col("gi"), col("cvi"),
         posexplode(slice(col("cvarr"), col("gi") + lit(1), lit(Int.MaxValue)))
           .as(Seq("__joff", "cvj")))
       .groupBy(col("gi"), (col("gi") + col("__joff")).as("gj"))
-      .agg(sum(grid6(col("cvi") * col("cvj")).cast(d28)).cast("double").as("gij"))
+      .agg(sum(floorGrid(col("cvi") * col("cvj"), 1e6).cast(d28)).cast("double").as("gij"))
     // d(d+1)/2 cells — a FIXED-size panel (4160 rows at d=64) at any
     // corpus scale; collecting it is metadata traffic, not data.
     val g = Array.ofDim[Double](dim, dim)
@@ -897,7 +894,7 @@ object Ann {
     // one pass over n rows, no explode, no join, no extra exchange.
     val rArr = array(r.toIndexedSeq.map(lit): _*)
     centered.select(col("vec_id"),
-      aggregate(zip_with(col("cvarr"), rArr, (c, rv) => grid6(c * rv)),
+      aggregate(zip_with(col("cvarr"), rArr, (c, rv) => floorGrid(c * rv, 1e6)),
         lit(java.math.BigDecimal.ZERO).cast(d28),
         (acc, x) => (acc + x.cast(d28)).cast(d28))
         .cast("double").as("pc1_score"))
@@ -1423,7 +1420,6 @@ object Ann {
     */
   def sq8ErrorPanel(emb: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val d12 = org.apache.spark.sql.types.DecimalType(38, 12)
-    def q12(c: Column): Column = floor(c * lit(1e12)) / lit(1e12)
     val comps = emb.filter(col(vecCol).isNotNull)
       .select(col(idCol).cast("long").as("vec_id"),
         explode(col(vecCol).cast("array<double>")).as("x"))
@@ -1438,12 +1434,12 @@ object Ann {
       .withColumn("__err", col("x") - col("recon"))
       .groupBy(col("vec_id"), col("dim"), col("scale"))
       .agg(
-        (sum(q12(col("__err") * col("__err")).cast(d12)).cast("double")
+        (sum(floorGrid(col("__err") * col("__err"), 1e12).cast(d12)).cast("double")
           / col("dim")).as("mse"),
         max(abs(col("__err"))).as("max_abs_err"),
-        sum(q12(col("recon") * col("recon")).cast(d12)).cast("double")
+        sum(floorGrid(col("recon") * col("recon"), 1e12).cast(d12)).cast("double")
           .as("__rn2"),
-        sum(q12(col("x") * col("x")).cast(d12)).cast("double").as("__xn2"))
+        sum(floorGrid(col("x") * col("x"), 1e12).cast(d12)).cast("double").as("__xn2"))
       .select(col("vec_id"), col("dim"), col("scale"), col("mse"),
         col("max_abs_err"),
         when(col("__xn2") === 0.0, lit(0.0))

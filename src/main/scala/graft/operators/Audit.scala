@@ -3,6 +3,7 @@ package graft.operators
 import graft.operators.Ckpt.CkptOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.expressions.Kernels.floorGrid
 
 /** Referential-integrity audit across a star schema.
   *
@@ -299,7 +300,6 @@ object Audit {
     import org.apache.spark.sql.types.DecimalType
     require(quasiCols.nonEmpty && l >= 1,
       s"lDiversityEntropy needs quasi columns and positive l: $l")
-    def q6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
     val cells = df
       .filter((quasiCols.map(col(_).isNotNull) :+ col(sensitiveCol).isNotNull)
         .reduce(_ && _))
@@ -311,7 +311,7 @@ object Audit {
     cells.join(combos, quasiCols)
       .withColumn("__p", col("__n_cs").cast("double") / col("n_rows").cast("double"))
       .groupBy((quasiCols.map(col) :+ col("n_rows") :+ col("n_sensitive")): _*)
-      .agg((-sum(q6(col("__p") * log(col("__p")))
+      .agg((-sum(floorGrid(col("__p") * log(col("__p")), 1e6)
         .cast(DecimalType(28, 6))).cast("double")).as("entropy"))
       .withColumn("distinct_l_diverse", col("n_sensitive") >= l)
       .withColumn("entropy_l_diverse", col("entropy") >= lit(math.log(l.toDouble)))
@@ -341,7 +341,6 @@ object Audit {
     import org.apache.spark.sql.types.DecimalType
     require(quasiCols.nonEmpty && t > 0 && t <= 1,
       s"tCloseness needs quasi columns and t in (0,1]: $t")
-    def q6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
     val base = df
       .filter((quasiCols.map(col(_).isNotNull) :+ col(sensitiveCol).isNotNull)
         .reduce(_ && _))
@@ -362,7 +361,7 @@ object Audit {
         coalesce(col("__n_cs"), lit(0L)).cast("double")
           / col("n_rows").cast("double"))
     grid.groupBy((quasiCols.map(col) :+ col("n_rows")): _*)
-      .agg(sum(q6(abs(col("__p") - col("__q")))
+      .agg(sum(floorGrid(abs(col("__p") - col("__q")), 1e6)
         .cast(DecimalType(28, 6))).as("__d"))
       .withColumn("tv_distance", col("__d").cast("double") / lit(2.0))
       .withColumn("t_close", col("tv_distance") <= t)
@@ -395,7 +394,6 @@ object Audit {
                     epsilon: Double, sensitivity: Double = 1.0): DataFrame = {
     require(epsilon > 0 && sensitivity > 0,
       s"epsilon and sensitivity must be positive: $epsilon/$sensitivity")
-    def grid6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
     val b = sensitivity / epsilon
     val g = df.filter(groupCols.map(col(_).isNotNull).reduce(_ && _))
       .groupBy(groupCols.map(col): _*)
@@ -403,8 +401,8 @@ object Audit {
     val u = (Sampling.md5Long32(groupCols.map(col)).cast("double") + lit(0.5)) /
       lit(4294967296.0)
     val sign = when(u < 0.5, lit(-1.0)).otherwise(lit(1.0))
-    val lnq = grid6(log(lit(1.0) - lit(2.0) * abs(u - lit(0.5))))
-    val noise = grid6(lit(-b) * sign * lnq)
+    val lnq = floorGrid(log(lit(1.0) - lit(2.0) * abs(u - lit(0.5))), 1e6)
+    val noise = floorGrid(lit(-b) * sign * lnq, 1e6)
     g.withColumn("noise", noise)
       .withColumn("noisy_count", col("n_rows").cast("double") + col("noise"))
       .withColumn("released_count",
@@ -434,7 +432,6 @@ object Audit {
     import org.apache.spark.sql.types.DecimalType
     require(epsilon > 0 && lo < hi,
       s"dpNoisyMean needs positive epsilon and lo < hi: $epsilon, [$lo, $hi]")
-    def grid6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
     val bSum = math.max(math.abs(lo), math.abs(hi)) / (epsilon / 2.0)
     val bCnt = 1.0 / (epsilon / 2.0)
     val clamped = least(lit(hi), greatest(lit(lo), col(valueCol).cast("double")))
@@ -443,13 +440,13 @@ object Audit {
         .reduce(_ && _))
       .groupBy(groupCols.map(col): _*)
       .agg(count(lit(1)).as("n_rows"),
-        sum(grid6(clamped).cast(DecimalType(28, 6))).as("__cs"))
+        sum(floorGrid(clamped, 1e6).cast(DecimalType(28, 6))).as("__cs"))
       .withColumn("clamped_sum", col("__cs").cast("double")).drop("__cs")
     def draw(salt: String, b: Double): Column = {
       val u = (Sampling.md5Long32(groupCols.map(col) :+ lit(salt))
         .cast("double") + lit(0.5)) / lit(4294967296.0)
       val sign = when(u < 0.5, lit(-1.0)).otherwise(lit(1.0))
-      grid6(lit(-b) * sign * grid6(log(lit(1.0) - lit(2.0) * abs(u - lit(0.5)))))
+      floorGrid(lit(-b) * sign * floorGrid(log(lit(1.0) - lit(2.0) * abs(u - lit(0.5))), 1e6), 1e6)
     }
     g.withColumn("noise_sum", draw("sum", bSum))
       .withColumn("noise_cnt", draw("cnt", bCnt))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.expressions.Kernels
 import graft.functions.TextOps
+import graft.expressions.Kernels.floorGrid
 
 /** Corpus-quality operators an LLM training-data pipeline runs after
   * dedup: repetition filtering, benchmark decontamination, corpus-
@@ -42,7 +43,6 @@ object CorpusQc {
   def jsBySource(df: DataFrame, sourceCol: String, textCol: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val d6 = DecimalType(28, 6)
-    def grid6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
     val counts = df.filter(col(sourceCol).isNotNull && col(textCol).isNotNull)
       .select(col(sourceCol).as("src"),
         explode(TextOps.tokens(col(textCol))).as("tok"))
@@ -64,8 +64,8 @@ object CorpusQc {
     val tbD = col("tb").cast("double")
     val cross1 = naD * tbD
     val cross2 = nbD * taD
-    val termA = grid6(naD / taD * log(lit(2.0) * cross1 / (cross1 + cross2)))
-    val termB = grid6(nbD / tbD * log(lit(2.0) * cross2 / (cross1 + cross2)))
+    val termA = floorGrid(naD / taD * log(lit(2.0) * cross1 / (cross1 + cross2)), 1e6)
+    val termB = floorGrid(nbD / tbD * log(lit(2.0) * cross2 / (cross1 + cross2)), 1e6)
     val pair = joined.groupBy(col("source_a"), col("source_b"))
       .agg(count(lit(1)).as("n_tokens_common"),
         sum(col("na")).as("__ca"), sum(col("nb")).as("__cb"),
@@ -434,15 +434,14 @@ object CorpusQc {
       .ckptPartitioned()
     val m1 = pair.groupBy(col("w1")).agg(sum(col("n12")).as("n1"))
     val tot = pair.agg(sum(col("n12")).as("t"), count(lit(1)).as("n_pairs"))
-    def q6(c: Column): Column = floor(c * lit(1e6)) / lit(1e6)
     val cond = pair.join(m1, "w1")
       .select((col("n12") *
-        q6(log(col("n1").cast("double") / col("n12").cast("double"))))
+        floorGrid(log(col("n1").cast("double") / col("n12").cast("double")), 1e6))
         .cast(DecimalType(28, 6)).as("__t"))
       .agg(sum(col("__t")).as("__ch"))
     val uni = m1.crossJoin(broadcast(tot.select(col("t"))))
       .select((col("n1") *
-        q6(log(col("t").cast("double") / col("n1").cast("double"))))
+        floorGrid(log(col("t").cast("double") / col("n1").cast("double")), 1e6))
         .cast(DecimalType(28, 6)).as("__t"),
         lit(1L).as("__n1key"))
       .agg(sum(col("__t")).as("__uh"), count(lit(1)).as("n_distinct_w1"))
@@ -516,15 +515,14 @@ object CorpusQc {
     val ranked = graft.operators.PrefixSum.globalOrdered(
         vocab, Seq(col("cnt").desc, col("tok")), "cnt")
       .select(col("cnt"), col("row_rank").as("rank"))
-    def q6(c: Column): Column = floor(c * lit(1e6)) / lit(1e6)
     // §5 scale rule: a 1e-8 grid casts at DECIMAL scale 8, never finer
     // — finer scales let the grid point's double representation error
     // into the cast's rounding decision.
     def q8d(c: Column): Column =
-      (floor(c * lit(1e8)) / lit(1e8)).cast(DecimalType(28, 8))
+      floorGrid(c, 1e8).cast(DecimalType(28, 8))
     val pts = ranked.select(
-      q6(log(col("rank").cast("double"))).as("lx"),
-      q6(log(col("cnt").cast("double"))).as("ly"))
+      floorGrid(log(col("rank").cast("double")), 1e6).as("lx"),
+      floorGrid(log(col("cnt").cast("double")), 1e6).as("ly"))
     val moms = pts.agg(count(lit(1)).as("n_types"),
       sum(q8d(col("lx"))).as("sx"), sum(q8d(col("ly"))).as("sy"),
       sum(q8d(col("lx") * col("ly"))).as("sxy"),
@@ -588,12 +586,11 @@ object CorpusQc {
         sum(col("y.n_tokens")).as("cum_tokens"),
         sum(col("y.n_new_types")).as("cum_types"))
       .ckptPartitioned()
-    def q6(c: Column): Column = floor(c * lit(1e6)) / lit(1e6)
     def q8d(c: Column): Column =
-      (floor(c * lit(1e8)) / lit(1e8)).cast(DecimalType(28, 8))
+      floorGrid(c, 1e8).cast(DecimalType(28, 8))
     val pts = cum.filter(col("cum_tokens") > 0 && col("cum_types") > 0)
-      .select(q6(log(col("cum_tokens").cast("double"))).as("lx"),
-        q6(log(col("cum_types").cast("double"))).as("ly"))
+      .select(floorGrid(log(col("cum_tokens").cast("double")), 1e6).as("lx"),
+        floorGrid(log(col("cum_types").cast("double")), 1e6).as("ly"))
     val moms = pts.agg(count(lit(1)).as("__n"),
       sum(q8d(col("lx"))).as("sx"), sum(q8d(col("ly"))).as("sy"),
       sum(q8d(col("lx") * col("ly"))).as("sxy"),
@@ -606,7 +603,7 @@ object CorpusQc {
     val fit = moms.select(beta.as("heaps_beta"),
         ((col("sy").cast("double") - beta * col("sx").cast("double"))
           / col("__n")).as("__icept"))
-      .select(col("heaps_beta"), q6(exp(col("__icept"))).as("heaps_k"))
+      .select(col("heaps_beta"), floorGrid(exp(col("__icept")), 1e6).as("heaps_k"))
     cum.crossJoin(broadcast(fit))
       .select(col("bucket"), col("n_tokens"), col("n_new_types"),
         col("cum_tokens"), col("cum_types"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.expressions.Kernels
+import graft.expressions.Kernels.floorGrid
 
 /** Distribution-drift statistics between an "old" and a "new" slice
   * of one numeric column — the monitoring layer over the reference's
@@ -26,7 +27,6 @@ import graft.expressions.Kernels
   */
 object Drift {
 
-  private def grid6(c: Column): Column = floor(c * lit(1e6)) / lit(1e6)
 
   /** Population Stability Index over the shared equi-width histogram —
     * the scalar the credit-risk / model-monitoring world actually
@@ -63,8 +63,8 @@ object Drift {
     val withP = byBucket.crossJoin(broadcast(tot))
       .withColumn("p_old", col("n_old") / col("tot_old").cast("double"))
       .withColumn("p_new", col("n_new") / col("tot_new").cast("double"))
-    val term = grid6((col("p_new") - col("p_old"))
-      * grid6(log(col("p_new") / col("p_old"))))
+    val term = floorGrid((col("p_new") - col("p_old"))
+      * floorGrid(log(col("p_new") / col("p_old")), 1e6), 1e6)
     withP.agg(
       sum(when(col("n_old") > 0 && col("n_new") > 0,
         Kernels.toDecimal(term, 28, 6))).cast("double").as("psi"),
@@ -112,7 +112,7 @@ object Drift {
       .withColumn("p_new", col("n_new") / col("tot_new").cast("double"))
       .withColumn("m", (col("p_old") + col("p_new")) / 2.0)
     def kl(p: Column): Column =
-      when(p > 0.0, grid6(p * grid6(log(p / col("m"))))).otherwise(lit(0.0))
+      when(p > 0.0, floorGrid(p * floorGrid(log(p / col("m")), 1e6), 1e6)).otherwise(lit(0.0))
     withP.agg(
       ((sum(Kernels.toDecimal(kl(col("p_old")), 28, 6)).cast("double")
         + sum(Kernels.toDecimal(kl(col("p_new")), 28, 6)).cast("double")) / 2.0)
@@ -159,9 +159,9 @@ object Drift {
       .withColumn("__diff", col("p_new") - col("p_old"))
     withP.agg(
       sum(when(col("n_old") > 0,
-        Kernels.toDecimal(grid6(col("__diff") * col("__diff") / col("p_old")), 28, 6)))
+        Kernels.toDecimal(floorGrid(col("__diff") * col("__diff") / col("p_old"), 1e6), 28, 6)))
         .cast("double").as("chi2"),
-      (sum(Kernels.toDecimal(grid6(abs(col("__diff"))), 28, 6)).cast("double")
+      (sum(Kernels.toDecimal(floorGrid(abs(col("__diff")), 1e6), 28, 6)).cast("double")
         * lit(0.5)).as("tv_dist"),
       sum(when(col("n_old") > 0, 1).otherwise(0)).as("n_buckets_used"),
       sum(when(col("n_old") > 0, 0).otherwise(1)).as("n_buckets_skipped"),
@@ -203,7 +203,7 @@ object Drift {
       val kv = lit(1.0) +
         graft.expressions.Kernels.dotProduct(col("a.v"), col("b.v")) /
           size(col("a.v")).cast("double")
-      grid6(kv * kv).cast(DecimalType(28, 6))
+      floorGrid(kv * kv, 1e6).cast(DecimalType(28, 6))
     }
     def sideSum(isNew: Boolean): DataFrame = {
       val s = capped.filter(col("is_new") === isNew)
@@ -391,16 +391,15 @@ object Drift {
   def distributionFit(df: DataFrame, valueCol: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val d6 = DecimalType(28, 6)
-    def q6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
     val base = df.select(col(valueCol).cast("double").as("__v"))
       .filter(col("__v").isNotNull && col("__v") > 0.0)
     val perVal = base.groupBy(col("__v")).agg(count(lit(1)).as("__n"))
     val cum = PrefixSum.globalOrderedN(perVal, Seq(col("__v")), Seq("__n"))
     val moms = base.agg(count(lit(1)).as("n"),
-        sum(q6(col("__v")).cast(d6)).as("__sv"),
-        sum(q6(col("__v") * col("__v")).cast(d6)).as("__svv"),
-        sum(q6(log(col("__v"))).cast(d6)).as("__sl"),
-        sum(q6(q6(log(col("__v"))) * q6(log(col("__v")))).cast(d6)).as("__sll"))
+        sum(floorGrid(col("__v"), 1e6).cast(d6)).as("__sv"),
+        sum(floorGrid(col("__v") * col("__v"), 1e6).cast(d6)).as("__svv"),
+        sum(floorGrid(log(col("__v")), 1e6).cast(d6)).as("__sl"),
+        sum(floorGrid(floorGrid(log(col("__v")), 1e6) * floorGrid(log(col("__v")), 1e6), 1e6).cast(d6)).as("__sll"))
       .select(col("n"),
         (col("__sv").cast("double") / col("n").cast("double")).as("__mu"),
         ((col("__svv").cast("double")
@@ -417,7 +416,7 @@ object Drift {
       val t = lit(1.0) / (lit(1.0) + lit(0.3275911) * x)
       val poly = ((((lit(1.061405429) * t - lit(1.453152027)) * t
         + lit(1.421413741)) * t - lit(0.284496736)) * t + lit(0.254829592)) * t
-      val halfErfc = lit(0.5) * q6(poly * exp(-(x * x)))
+      val halfErfc = lit(0.5) * floorGrid(poly * exp(-(x * x)), 1e6)
       when(z < 0.0, halfErfc).otherwise(lit(1.0) - halfErfc)
     }
     val scored = cum.crossJoin(broadcast(moms))
@@ -426,9 +425,9 @@ object Drift {
         (col("prefix___n") - col("__n")).cast("double") / col("n").cast("double"))
       .withColumn("__norm", phi((col("__v") - col("__mu")) / sqrt(col("__var"))))
       .withColumn("__exp",
-        lit(1.0) - q6(exp(lit(-1.0) * col("__v") / col("__mu"))))
+        lit(1.0) - floorGrid(exp(lit(-1.0) * col("__v") / col("__mu")), 1e6))
       .withColumn("__logn",
-        phi((q6(log(col("__v"))) - col("__mul")) / sqrt(col("__varl"))))
+        phi((floorGrid(log(col("__v")), 1e6) - col("__mul")) / sqrt(col("__varl"))))
       .ckptPartitioned()
     def ksOf(fit: Column): Column =
       greatest(abs(col("__fe") - fit), abs(col("__fp") - fit))

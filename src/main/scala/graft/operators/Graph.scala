@@ -4,6 +4,7 @@ import graft.operators.Ckpt.CkptOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.expressions.Kernels.floorGrid
 
 /** Distributed graph analytics over edge lists.
   *
@@ -541,7 +542,6 @@ object Graph {
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            weightCol: String, iterations: Int = 10): DataFrame = {
     require(iterations >= 1, s"need at least one iteration: $iterations")
-    def q12(c: org.apache.spark.sql.Column) = floor(c * lit(1e12)) / lit(1e12)
     val d28 = DecimalType(28, 12)
     val eRaw = edges.select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"),
@@ -567,11 +567,11 @@ object Graph {
       // k-core fixpoint; measured 2 extra edge passes per iteration)
       val aRaw = hub.join(e, col("node") === col("src"))
         .groupBy(col("dst"))
-        .agg(sum(q12(col("hub") * col("w")).cast(d28)).cast("double")
+        .agg(sum(floorGrid(col("hub") * col("w"), 1e12).cast(d28)).cast("double")
           .as("araw"))
         .ckptPartitioned()
       val aN = aRaw.agg(sqrt(coalesce(
-        sum(q12(col("araw") * col("araw")).cast(d28)).cast("double"),
+        sum(floorGrid(col("araw") * col("araw"), 1e12).cast(d28)).cast("double"),
         lit(0.0))).as("nrm"))
       auth = nodes.crossJoin(broadcast(aN))
         .join(aRaw.withColumnRenamed("dst", "node"), Seq("node"), "left")
@@ -581,11 +581,11 @@ object Graph {
         .ckptPartitioned()
       val hRaw = auth.join(e, col("node") === col("dst"))
         .groupBy(col("src"))
-        .agg(sum(q12(col("authority") * col("w")).cast(d28)).cast("double")
+        .agg(sum(floorGrid(col("authority") * col("w"), 1e12).cast(d28)).cast("double")
           .as("hraw"))
         .ckptPartitioned()
       val hN = hRaw.agg(sqrt(coalesce(
-        sum(q12(col("hraw") * col("hraw")).cast(d28)).cast("double"),
+        sum(floorGrid(col("hraw") * col("hraw"), 1e12).cast(d28)).cast("double"),
         lit(0.0))).as("nrm"))
       hub = nodes.crossJoin(broadcast(hN))
         .join(hRaw.withColumnRenamed("src", "node"), Seq("node"), "left")
@@ -632,9 +632,8 @@ object Graph {
     * panel; share and slope broadcast from 1-row panels.
     */
   def degreeDistribution(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    def q6(c: org.apache.spark.sql.Column) = floor(c * lit(1e6)) / lit(1e6)
     def q8d(c: org.apache.spark.sql.Column) =
-      (floor(c * lit(1e8)) / lit(1e8)).cast(DecimalType(28, 8))
+      floorGrid(c, 1e8).cast(DecimalType(28, 8))
     val deg = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .select(col(srcCol).cast("string").as("u"),
@@ -645,8 +644,8 @@ object Graph {
       .ckptPartitioned()
     val tot = hist.agg(sum(col("n_nodes")).as("__tot"))
     val pts = hist.select(
-      q6(log(col("degree").cast("double"))).as("lx"),
-      q6(log(col("n_nodes").cast("double"))).as("ly"))
+      floorGrid(log(col("degree").cast("double")), 1e6).as("lx"),
+      floorGrid(log(col("n_nodes").cast("double")), 1e6).as("ly"))
     val moms = pts.filter(col("lx").isNotNull)
       .agg(count(lit(1)).as("__k"),
         sum(q8d(col("lx"))).as("sx"), sum(q8d(col("ly"))).as("sy"),
@@ -804,7 +803,6 @@ object Graph {
   def betweenness(edges: DataFrame, srcCol: String, dstCol: String,
                   maxDepth: Int = 8): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    def q9(c: org.apache.spark.sql.Column) = floor(c * lit(1e9)) / lit(1e9)
     val e = canonEdges(edges, srcCol, dstCol)
     val nodes = e.select(col("src").as("node"))
       .unionAll(e.select(col("dst"))).distinct().ckptPartitioned()
@@ -822,8 +820,8 @@ object Graph {
         .join(e.withColumnRenamed("src", "v").withColumnRenamed("dst", "w"), "v")
         .join(down, Seq("s", "w"))
         .select(col("s"), col("v"),
-          q9((col("sigma").cast("double") / col("sigma_w").cast("double"))
-            * (lit(1.0) + coalesce(col("delta_w"), lit(0.0))))
+          floorGrid((col("sigma").cast("double") / col("sigma_w").cast("double"))
+            * (lit(1.0) + coalesce(col("delta_w"), lit(0.0))), 1e9)
             .cast(DecimalType(28, 9)).as("term"))
       delta = levels(lev).select(col("s"), col("v"))
         .join(terms.groupBy(col("s"), col("v"))
@@ -845,7 +843,7 @@ object Graph {
     }
     bc.withColumn("betweenness_norm",
       if (nTot >= 3)
-        q9(col("betweenness") / lit((nTot - 1.0) * (nTot - 2.0)))
+        floorGrid(col("betweenness") / lit((nTot - 1.0) * (nTot - 2.0)), 1e9)
       else lit(null).cast("double"))
   }
 
@@ -870,7 +868,6 @@ object Graph {
   def closeness(edges: DataFrame, srcCol: String, dstCol: String,
                 maxDepth: Int = 8): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    def q9(c: org.apache.spark.sql.Column) = floor(c * lit(1e9)) / lit(1e9)
     val e = canonEdges(edges, srcCol, dstCol)
     val nodes = e.select(col("src").as("node"))
       .unionAll(e.select(col("dst"))).distinct().ckptPartitioned()
@@ -883,7 +880,7 @@ object Graph {
       case Some(rows) => rows.groupBy(col("s").as("node"))
         .agg(count(lit(1)).as("n_reached"),
           sum(col("d")).as("total_dist"),
-          sum(q9(lit(1.0) / col("d").cast("double"))
+          sum(floorGrid(lit(1.0) / col("d").cast("double"), 1e9)
             .cast(DecimalType(28, 9))).cast("double").as("harmonic"))
       case None => nodes.limit(0).select(col("node"),
         lit(0L).as("n_reached"), lit(0L).as("total_dist"),
@@ -895,9 +892,9 @@ object Graph {
         coalesce(col("total_dist"), lit(0L)).as("total_dist"),
         coalesce(col("harmonic"), lit(0.0)).as("harmonic"),
         when(coalesce(col("n_reached"), lit(0L)) === 0, lit(0.0))
-          .otherwise(q9(
+          .otherwise(floorGrid(
             (col("n_reached").cast("double") / lit((nTot - 1).toDouble))
-              * (col("n_reached").cast("double") / col("total_dist").cast("double"))))
+              * (col("n_reached").cast("double") / col("total_dist").cast("double")), 1e9))
           .as("closeness_wf"))
   }
 

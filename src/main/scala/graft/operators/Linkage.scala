@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.expressions.JaroWinklerExpr
+import graft.expressions.Kernels.floorGrid
 
 /** Entity resolution / record linkage over a name-like column:
   * blocking + pairwise fuzzy scoring + best-match assignment. The
@@ -37,7 +38,6 @@ object Linkage {
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
   }
 
-  private def q6(c: Column): Column = floor(c * lit(1e6)) / lit(1e6)
 
   /** Distinct (id, name, block) relation with oversized blocks dropped. */
   private def blocked(df: DataFrame, idCol: String, nameCol: String,
@@ -78,7 +78,7 @@ object Linkage {
           col("a.rec_id") < col("b.rec_id"))
       .select(col("a.rec_id").as("rec_id_a"), col("b.rec_id").as("rec_id_b"),
         col("a.name_norm").as("name_a"), col("b.name_norm").as("name_b"),
-        q6(jaroWinkler(col("a.name_norm"), col("b.name_norm"))).as("jw_sim"))
+        floorGrid(jaroWinkler(col("a.name_norm"), col("b.name_norm")), 1e6).as("jw_sim"))
       .filter(col("jw_sim") >= threshold)
   }
 
@@ -95,7 +95,7 @@ object Linkage {
     val scored = l.as("l").join(r.as("r"), col("l.block") === col("r.block"))
       .select(col("l.rec_id").as("rec_id"), col("l.name_norm").as("name_norm"),
         col("r.rec_id").as("ref_id"), col("r.name_norm").as("ref_name"),
-        q6(jaroWinkler(col("l.name_norm"), col("r.name_norm"))).as("jw_sim"))
+        floorGrid(jaroWinkler(col("l.name_norm"), col("r.name_norm")), 1e6).as("jw_sim"))
       .filter(col("jw_sim") >= threshold)
     val w = Window.partitionBy(col("rec_id"))
       .orderBy(col("jw_sim").desc, col("ref_id"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.expressions.Kernels.floorGrid
 
 /** In-engine classical ML — the model-fitting steps a curation
   * pipeline runs WITHOUT leaving the lake (the reference runs its
@@ -24,7 +25,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object MlLite {
 
-  private def q6(c: Column): Column = floor(c * lit(1e6)) / lit(1e6)
   private val D6 = DecimalType(28, 6)
 
   /** Multinomial naive-Bayes language classifier, trained and scored
@@ -71,13 +71,13 @@ object MlLite {
       .join(classTerm.groupBy(col("label")).agg(sum(col("cnt")).as("total_c")),
         Seq("label"))
       .select(col("label"),
-        q6(log(col("n_c").cast("double") / col("n_total").cast("double")))
+        floorGrid(log(col("n_c").cast("double") / col("n_total").cast("double")), 1e6)
           .as("log_prior"),
-        q6(log((col("total_c") + col("v")).cast("double"))).as("log_denom"))
+        floorGrid(log((col("total_c") + col("v")).cast("double")), 1e6).as("log_denom"))
     // Σ_t tf · ln(cnt+1): inner join on token, zero for unseen pairs
     val matchSum = docTerm
       .join(classTerm.select(col("label"),
-          col("token"), q6(log((col("cnt") + 1).cast("double"))).as("log_cnt1")),
+          col("token"), floorGrid(log((col("cnt") + 1).cast("double")), 1e6).as("log_cnt1")),
         Seq("token"))
       .groupBy(col("doc_id"), col("label"))
       .agg(sum((col("tf") * col("log_cnt1")).cast(D6)).as("match_sum"))
@@ -176,17 +176,17 @@ object MlLite {
       .withColumn("n_c_tr", col("n_c_g") - coalesce(col("n_c_f"), lit(0L)))
       .filter(col("n_c_tr") > 0)
       .select(col("fold_id"), col("label"),
-        q6(log(col("n_c_tr").cast("double")
-          / (col("n_g") - col("n_f")).cast("double"))).as("log_prior"),
-        q6(log(((col("tot_g") - coalesce(col("tot_f"), lit(0L)))
-          + col("v_train")).cast("double"))).as("log_denom"))
+        floorGrid(log(col("n_c_tr").cast("double")
+          / (col("n_g") - col("n_f")).cast("double")), 1e6).as("log_prior"),
+        floorGrid(log(((col("tot_g") - coalesce(col("tot_f"), lit(0L)))
+          + col("v_train")).cast("double")), 1e6).as("log_denom"))
     // Σ tf·ln(cnt_train+1): held-out counts subtract inside the join
     val matchSum = docTerm
       .join(ctg, Seq("token"))
       .join(ctf, Seq("fold_id", "label", "token"), "left")
       .withColumn("__cnt_tr", col("cnt_g") - coalesce(col("cnt_f"), lit(0L)))
       .groupBy(col("doc_id"), col("label"))
-      .agg(sum((col("tf") * q6(log((col("__cnt_tr") + 1).cast("double"))))
+      .agg(sum((col("tf") * floorGrid(log((col("__cnt_tr") + 1).cast("double")), 1e6))
         .cast(D6)).as("match_sum"))
     val docPanel = docTerm.groupBy(col("doc_id"), col("fold_id"))
       .agg(sum(col("tf")).as("n_tok"))
@@ -241,7 +241,7 @@ object MlLite {
     require(lambda >= 0, s"lambda=$lambda must be non-negative")
     val rows = df.filter(col(yCol).isNotNull && col(x1Col).isNotNull &&
       col(x2Col).isNotNull)
-    val yq = q6(col(yCol).cast("double"))
+    val yq = floorGrid(col(yCol).cast("double"), 1e6)
     val x1 = col(x1Col).cast("double")
     val x2 = col(x2Col).cast("double")
     val m = rows.agg(
@@ -257,7 +257,7 @@ object MlLite {
       // yq² sits on the 1e-12 grid at >unit magnitude — §5 forbids a
       // scale-12 cast there; re-floor onto the 1e-6 grid first so the
       // scale-6 cast has no rounding decision to make
-      sum(q6(yq * yq).cast(D6)).cast("double").as("syy"))
+      sum(floorGrid(yq * yq, 1e6).cast(D6)).cast("double").as("syy"))
     // Cramer over the centered 2×2 system (the intercept eliminated):
     //   [a11 a12] [b1]   [c1]      a11 = Sx1x1 − Sx1²/n, …
     //   [a12 a22] [b2] = [c2]
@@ -315,15 +315,15 @@ object MlLite {
     val rows = df.filter(col(qtyCol).isNotNull && col(priceCol).isNotNull &&
         col(qtyCol) > 0 && col(priceCol) > 0)
       .select(col(groupCol).as("__g"),
-        q6(log(col(priceCol).cast("double"))).as("__x"),
-        q6(log(col(qtyCol).cast("double"))).as("__y"))
+        floorGrid(log(col(priceCol).cast("double")), 1e6).as("__x"),
+        floorGrid(log(col(qtyCol).cast("double")), 1e6).as("__y"))
     val m = rows.groupBy(col("__g")).agg(
       count(lit(1)).as("n"),
       sum(col("__x").cast(D6)).cast("double").as("sx"),
       sum(col("__y").cast(D6)).cast("double").as("sy"),
-      sum(q6(col("__x") * col("__x")).cast(D6)).cast("double").as("sxx"),
-      sum(q6(col("__x") * col("__y")).cast(D6)).cast("double").as("sxy"),
-      sum(q6(col("__y") * col("__y")).cast(D6)).cast("double").as("syy"))
+      sum(floorGrid(col("__x") * col("__x"), 1e6).cast(D6)).cast("double").as("sxx"),
+      sum(floorGrid(col("__x") * col("__y"), 1e6).cast(D6)).cast("double").as("sxy"),
+      sum(floorGrid(col("__y") * col("__y"), 1e6).cast(D6)).cast("double").as("syy"))
     def nz(d: Column): Column =
       when(d === 0.0, lit(null).cast("double")).otherwise(d)
     def sqp(c: Column): Column =
@@ -359,7 +359,7 @@ object MlLite {
                    x2Col: String): DataFrame = {
     val rows = df.filter(col(yCol).isNotNull && col(x1Col).isNotNull &&
       col(x2Col).isNotNull)
-    val yq = q6(col(yCol).cast("double"))
+    val yq = floorGrid(col(yCol).cast("double"), 1e6)
     val x1 = col(x1Col).cast("double")
     val x2 = col(x2Col).cast("double")
     val m = rows.agg(
@@ -372,7 +372,7 @@ object MlLite {
       sum((x1 * x2).cast(D6)).cast("double").as("sx1x2"),
       sum((x1 * yq).cast(D6)).cast("double").as("sx1y"),
       sum((x2 * yq).cast(D6)).cast("double").as("sx2y"),
-      sum(q6(yq * yq).cast(D6)).cast("double").as("syy"))
+      sum(floorGrid(yq * yq, 1e6).cast(D6)).cast("double").as("syy"))
     def nz(d: Column): Column =
       when(d === 0.0, lit(null).cast("double")).otherwise(d)
     def sqp(c: Column): Column =
@@ -482,7 +482,7 @@ object MlLite {
   def infoGain(df: DataFrame, yCol: String,
                featureCols: Seq[String]): DataFrame = {
     require(featureCols.nonEmpty, "infoGain needs at least one feature")
-    val lnq = (c: Column) => q6(log(c))
+    val lnq = (c: Column) => floorGrid(log(c), 1e6)
     val cells = cellsOf(df, yCol, featureCols)
     val perVal = cells.groupBy(col("feature"), col("fval"))
       .agg(sum(col("n_vc")).as("n_v"))
@@ -543,7 +543,7 @@ object MlLite {
   def decisionStump(df: DataFrame, yCol: String,
                     featureCols: Seq[String]): DataFrame = {
     require(featureCols.nonEmpty, "decisionStump needs at least one feature")
-    val lnq = (c: Column) => q6(log(c))
+    val lnq = (c: Column) => floorGrid(log(c), 1e6)
     val cells = cellsOf(df, yCol, featureCols)
     val perVal = cells.groupBy(col("feature"), col("fval"))
       .agg(sum(col("n_vc")).as("n_v"),
@@ -618,7 +618,6 @@ object MlLite {
     require(featureCols.nonEmpty && rounds >= 1,
       s"adaboost needs features and rounds >= 1: $featureCols, $rounds")
     val d12 = DecimalType(38, 12)
-    def q12(c: Column): Column = floor(c * lit(1e12)) / lit(1e12)
     val combos = df
       .filter(col(yCol).isNotNull &&
         featureCols.map(col(_).isNotNull).reduce(_ && _))
@@ -630,7 +629,7 @@ object MlLite {
       .head.getAs[Long]("n").toDouble
     // initial mass: n_j/n floored to the 1e-12 grid
     var panel = combos.withColumn("m",
-      q12(col("n_j").cast("double") / lit(nTotal))).ckptPartitioned()
+      floorGrid(col("n_j").cast("double") / lit(nTotal), 1e12)).ckptPartitioned()
     final case class Stump(feature: String, thr: Long, polA: Boolean,
                            eps: Double, alpha: Double)
     var model = List.empty[Stump]
@@ -685,8 +684,8 @@ object MlLite {
         else when(col(st.feature) <= st.thr, 0L).otherwise(1L)
       panel = panel.withColumn("m",
           when(predicted =!= col("y"),
-            q12(col("m") / (lit(2.0) * lit(eps))))
-            .otherwise(q12(col("m") / (lit(2.0) * (lit(1.0) - lit(eps))))))
+            floorGrid(col("m") / (lit(2.0) * lit(eps)), 1e12))
+            .otherwise(floorGrid(col("m") / (lit(2.0) * (lit(1.0) - lit(eps))), 1e12)))
         .ckptPartitioned()
     }
     val stumps = model.reverse.toArray
@@ -817,7 +816,7 @@ object MlLite {
       .empty[(Int, String, Long, Double, Double, Double)]
     for (r <- 1 to rounds) {
       val resid = panel.withColumn("s",
-        q6(col("sy").cast("double") - col("n_j").cast("double") * col("f")))
+        floorGrid(col("sy").cast("double") - col("n_j").cast("double") * col("f"), 1e6))
       val perVal = resid.select(col("s"), col("n_j"),
           explode(array(featureCols.map(f =>
             struct(lit(f).as("feature"), col(f).as("fval"))): _*)).as("fx"))
@@ -841,8 +840,8 @@ object MlLite {
         .withColumn("ng", (col("nt") - col("n_le")).cast("double"))
         .withColumn("gain",
           col("sl") * col("sl") / col("nl") + col("sg") * col("sg") / col("ng"))
-        .withColumn("gamma_l", q6(col("sl") / col("nl")))
-        .withColumn("gamma_r", q6(col("sg") / col("ng")))
+        .withColumn("gamma_l", floorGrid(col("sl") / col("nl"), 1e6))
+        .withColumn("gamma_r", floorGrid(col("sg") / col("ng"), 1e6))
       val rank = Window.orderBy(col("gain").desc, col("feature"), col("fval"))
       val bestRows = cand.withColumn("__rk", row_number().over(rank))
         .filter(col("__rk") === 1)
@@ -858,9 +857,9 @@ object MlLite {
             .otherwise(lit(eta * gr)))
         .ckptPartitioned()
       val mse = panel.agg(
-          (sum(q6(col("syy").cast("double")
+          (sum(floorGrid(col("syy").cast("double")
             - lit(2.0) * col("f") * col("sy").cast("double")
-            + col("n_j").cast("double") * col("f") * col("f")).cast(D6))
+            + col("n_j").cast("double") * col("f") * col("f"), 1e6).cast(D6))
             .cast("double") / sum(col("n_j")).cast("double")).as("mse"))
         .collect().head.getAs[Double]("mse")
       out += ((r, feat, thr, gl, gr, mse))
@@ -939,7 +938,6 @@ object MlLite {
   def averagePrecision(df: DataFrame, scoreCol: String,
                        labelPos: Column): DataFrame = {
     val d6 = DecimalType(28, 6)
-    def grid6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
     def nz(c: Column): Column =
       when(c === 0.0, lit(null).cast("double")).otherwise(c)
     val panel = df.filter(col(scoreCol).isNotNull)
@@ -957,7 +955,7 @@ object MlLite {
     val nGe = (col("n_pos") + col("n_neg")).cast("double") -
       (col("prefix___nt") - col("__nt")).cast("double")
     val term = col("__np").cast(DecimalType(19, 0)) *
-      grid6(tpGe / nGe).cast(d6)
+      floorGrid(tpGe / nGe, 1e6).cast(d6)
     pref.crossJoin(broadcast(tot))
       .agg(sum(term).as("__ap"), max(col("n_pos")).as("n_pos"),
         max(col("n_neg")).as("n_neg"))
@@ -986,19 +984,18 @@ object MlLite {
   def baselineScorePanel(df: DataFrame, labelPos: Column,
                          groupExpr: Column): DataFrame = {
     val d6 = DecimalType(28, 6)
-    def q6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
-    def lnq(c: Column) = q6(log(c))
+    def lnq(c: Column) = floorGrid(log(c), 1e6)
     val panel = df.groupBy(groupExpr.as("__g"))
       .agg(count(lit(1)).as("__n"),
         sum(when(labelPos, 1L).otherwise(0L)).as("__pos"))
       .withColumn("__p",
         (col("__pos").cast("double") + 0.5) / (col("__n").cast("double") + 1.0))
       .withColumn("__neg", col("__n") - col("__pos"))
-    val brierTerm = q6(col("__pos").cast("double")
+    val brierTerm = floorGrid(col("__pos").cast("double")
       * (lit(1.0) - col("__p")) * (lit(1.0) - col("__p"))
-      + col("__neg").cast("double") * col("__p") * col("__p"))
-    val llTerm = q6(lit(-1.0) * (col("__pos").cast("double") * lnq(col("__p"))
-      + col("__neg").cast("double") * lnq(lit(1.0) - col("__p"))))
+      + col("__neg").cast("double") * col("__p") * col("__p"), 1e6)
+    val llTerm = floorGrid(lit(-1.0) * (col("__pos").cast("double") * lnq(col("__p"))
+      + col("__neg").cast("double") * lnq(lit(1.0) - col("__p"))), 1e6)
     def nz(c: Column): Column =
       when(c === 0.0, lit(null).cast("double")).otherwise(c)
     panel.agg(
@@ -1153,7 +1150,6 @@ object MlLite {
   def vif(df: DataFrame, xCols: Seq[String]): DataFrame = {
     require(xCols.size == 3, s"this panel is fixed at 3 features: $xCols")
     val d12 = DecimalType(38, 12)
-    def grid(c: Column) = floor(c * lit(1e6)) / lit(1e6)
     val base = df.select(
         col(xCols(0)).cast("double").as("x1"),
         col(xCols(1)).cast("double").as("x2"),
@@ -1187,8 +1183,8 @@ object MlLite {
         (rki * rki + rkj * rkj - lit(2.0) * rki * rkj * rij)
           / (lit(1.0) - rij * rij))
     def rowOf(name: String, r2: Column): Column =
-      struct(lit(name).as("feature"), grid(r2).as("r2_others"),
-        when(r2.isNotNull && r2 < 1.0, grid(lit(1.0) / (lit(1.0) - r2)))
+      struct(lit(name).as("feature"), floorGrid(r2, 1e6).as("r2_others"),
+        when(r2.isNotNull && r2 < 1.0, floorGrid(lit(1.0) / (lit(1.0) - r2), 1e6))
           .as("vif"))
     withR.select(col("n"), explode(array(
         rowOf(xCols(0), r2Of(col("r12"), col("r13"), col("r23"))),
@@ -1396,15 +1392,15 @@ object MlLite {
       val classPanel = priors.join(totc, Seq("label"), "left")
         .crossJoin(broadcast(nTr)).crossJoin(broadcast(vg))
         .select(col("label"), col("n_train"),
-          q6(log(col("n_c").cast("double") / col("n_train").cast("double")))
+          floorGrid(log(col("n_c").cast("double") / col("n_train").cast("double")), 1e6)
             .as("log_prior"),
-          q6(log((coalesce(col("tot_c"), lit(0L)) + col("v")).cast("double")))
+          floorGrid(log((coalesce(col("tot_c"), lit(0L)) + col("v")).cast("double")), 1e6)
             .as("log_denom"))
         .ckptPartitioned()
       val matchSum = testTf
         .join(ctg.hint("shuffle_hash"), Seq("token"))
         .groupBy(col("doc_id"), col("label"))
-        .agg(sum((col("tf") * q6(log((col("cnt") + 1).cast("double"))))
+        .agg(sum((col("tf") * floorGrid(log((col("cnt") + 1).cast("double")), 1e6))
           .cast(D6)).as("match_sum"))
       val w = Window.partitionBy(col("doc_id"))
         .orderBy(col("score").desc, col("label"))
@@ -1468,7 +1464,6 @@ object MlLite {
     */
   def cohensKappa(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val d12 = DecimalType(28, 12)
-    def q12(c: Column) = floor(c * lit(1e12)) / lit(1e12)
     def nz(c: Column): Column =
       when(c === 0.0, lit(null).cast("double")).otherwise(c)
     val cells = df
@@ -1493,8 +1488,8 @@ object MlLite {
     val pe = ma.join(broadcast(mb), Seq("__c"))
       .crossJoin(broadcast(tot))
       .agg(coalesce(sum(
-        q12((col("__ra").cast("double") / col("n_items").cast("double")) *
-            (col("__cb").cast("double") / col("n_items").cast("double")))
+        floorGrid((col("__ra").cast("double") / col("n_items").cast("double")) *
+            (col("__cb").cast("double") / col("n_items").cast("double")), 1e12)
           .cast(d12)), lit(0).cast(d12)).as("__pe"))
     tot.crossJoin(broadcast(nClasses)).crossJoin(broadcast(pe))
       .select(col("n_items"), col("n_classes"), col("n_agree"),
@@ -1521,7 +1516,6 @@ object MlLite {
               predA: Column, predB: Column): DataFrame = {
     def nz(c: Column): Column =
       when(c === 0.0, lit(null).cast("double")).otherwise(c)
-    def grid6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
     val okA = predA === labelPos
     val okB = predB === labelPos
     val g = df
@@ -1555,7 +1549,7 @@ object MlLite {
         val t = lit(1.0) / (lit(1.0) + lit(0.3275911) * x)
         val poly = ((((lit(1.061405429) * t - lit(1.453152027)) * t
           + lit(1.421413741)) * t - lit(0.284496736)) * t + lit(0.254829592)) * t
-        grid6(poly * exp(-(x * x)))
+        floorGrid(poly * exp(-(x * x)), 1e6)
       })
   }
 
@@ -1571,7 +1565,7 @@ object MlLite {
     * `mce`) broadcast onto every row.
     *
     * Engine parity: bin ids come from floor over the exact Laplace
-    * quotient; per-bin confidence mass is Σ n_g·q6(p_g) as
+    * quotient; per-bin confidence mass is Σ n_g·floorGrid(p_g, 1e6) as
     * exact-decimal × gridded-double products (the AP/Benford term
     * discipline); the per-bin gap re-grids before the ece partial
     * sum. All sums are panel-sized (≤ nBins, ≤ k groups).
@@ -1580,7 +1574,6 @@ object MlLite {
                      nBins: Int = 10): DataFrame = {
     require(nBins >= 2, s"nBins=$nBins must be >= 2")
     val d6 = DecimalType(28, 6)
-    def q6c(c: Column) = floor(c * lit(1e6)) / lit(1e6)
     def nz(c: Column): Column =
       when(c === 0.0, lit(null).cast("double")).otherwise(c)
     val groups = df.groupBy(groupExpr.as("__g"))
@@ -1596,7 +1589,7 @@ object MlLite {
       .agg(sum(col("__n")).as("n_rows"),
         count(lit(1)).as("n_groups"),
         sum(col("__pos")).as("__pos"),
-        sum(col("__n").cast(DecimalType(19, 0)) * q6c(col("__p")).cast(d6))
+        sum(col("__n").cast(DecimalType(19, 0)) * floorGrid(col("__p"), 1e6).cast(d6))
           .as("__conf_mass"))
       .withColumn("avg_conf",
         col("__conf_mass").cast("double") / nz(col("n_rows").cast("double")))
@@ -1605,10 +1598,10 @@ object MlLite {
       .withColumn("abs_gap", abs(col("accuracy") - col("avg_conf")))
       .ckptPartitioned()
     val summary = bins.agg(
-      (sum(col("n_rows").cast(DecimalType(19, 0)) * q6c(col("abs_gap")).cast(d6))
+      (sum(col("n_rows").cast(DecimalType(19, 0)) * floorGrid(col("abs_gap"), 1e6).cast(d6))
         .cast("double") /
         nz(sum(col("n_rows")).cast("double"))).as("ece"),
-      max(q6c(col("abs_gap"))).as("mce"))
+      max(floorGrid(col("abs_gap"), 1e6)).as("mce"))
     bins.crossJoin(broadcast(summary))
       .select(col("bin"), col("n_rows"), col("n_groups"),
         col("avg_conf"), col("accuracy"), col("abs_gap"),

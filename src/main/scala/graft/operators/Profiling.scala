@@ -3,6 +3,7 @@ package graft.operators
 import graft.operators.Ckpt.CkptOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.expressions.Kernels.floorGrid
 
 /** Distribution profiling — the ANALYZE-style statistics a lake load
   * publishes next to row counts (reference: build_catalog.py's row
@@ -738,7 +739,7 @@ object Profiling {
       .crossJoin(panelOf(col("in_b") === 1L, "b"))
       .crossJoin(panelOf(lit(true), "u"))
     def grid(c: Column): Column =
-      (floor(c * lit(1e6)) / lit(1e6)).cast(DecimalType(28, 6))
+      floorGrid(c, 1e6).cast(DecimalType(28, 6))
     // exact-integer raw estimate, then the standard small-range branch
     def est(suffix: String): Column = {
       val raw = expr(
@@ -1093,7 +1094,6 @@ object Profiling {
     */
   def chi2Assoc(df: DataFrame, xCol: String, yCol: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    def grid12(c: Column): Column = floor(c * lit(1e12)) / lit(1e12)
     val xy = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .groupBy(col(xCol).as("__x"), col(yCol).as("__y"))
       .agg(count(lit(1)).as("__nxy"))
@@ -1112,7 +1112,7 @@ object Profiling {
     val pxy = col("__nxy").cast("double") / col("__n").cast("double")
     val ex = (col("__nx").cast("double") / col("__n").cast("double")) *
       (col("__ny").cast("double") / col("__n").cast("double"))
-    val term = grid12((pxy - ex) * (pxy - ex) / ex)
+    val term = floorGrid((pxy - ex) * (pxy - ex) / ex, 1e12)
     val sums = grid.crossJoin(broadcast(nt))
       .agg(sum(term.cast(DecimalType(18, 12))).as("__s"),
         sum(when(col("__nxy") > 0L, 1L).otherwise(0L)).as("n_cells"),

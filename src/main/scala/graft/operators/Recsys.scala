@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.expressions.Kernels.floorGrid
 
 /** Item-item collaborative filtering over implicit interactions — the
   * co-occurrence-normalized neighbor structure behind "users who took
@@ -27,7 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object Recsys {
 
-  private def q6(c: Column): Column = floor(c * lit(1e6)) / lit(1e6)
 
   /** Distinct (user, item) interactions with the deterministic
     * per-user cap applied.
@@ -245,8 +245,8 @@ object Recsys {
         .withColumnRenamed("n_users", "n_a"), Seq("item_a"))
       .join(marginals.withColumnRenamed("item_id", "item_b")
         .withColumnRenamed("n_users", "n_b"), Seq("item_b"))
-      .withColumn("cosine", q6(col("n_both").cast("double") /
-        sqrt(col("n_a").cast("double") * col("n_b").cast("double"))))
+      .withColumn("cosine", floorGrid(col("n_both").cast("double") /
+        sqrt(col("n_a").cast("double") * col("n_b").cast("double")), 1e6))
     // Symmetrize so every item ranks its full neighborhood, then cut.
     // ONE pass (r16, guide §2.4): each scored pair explodes into its
     // two orientations inline. The old two-branch union re-executed

@@ -3,6 +3,7 @@ package graft.operators
 import graft.operators.Ckpt.CkptOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.expressions.Kernels.floorGrid
 
 /** Deterministic sampling for training-data curation.
   *
@@ -737,7 +738,6 @@ object Sampling {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.DecimalType
     require(budget >= 1, s"budget=$budget must be positive")
-    def q6(c: Column) = floor(c * lit(1e6)) / lit(1e6)
     val ev = df.filter(col(strataCol).isNotNull && col(valueCol).isNotNull)
       .select(col(strataCol).as("stratum"), col(valueCol).cast("double").as("__v"))
     val moms = ev.groupBy(col("stratum"))
@@ -749,8 +749,8 @@ object Sampling {
           (col("__s2").cast("double")
             - col("__s1").cast("double") * col("__s1").cast("double") / col("n_rows"))
             / (col("n_rows") - 1)))).as("__sd0"))
-      .withColumn("sd", q6(coalesce(col("__sd0"), lit(0.0))))
-      .withColumn("__w", q6(col("n_rows").cast("double") * col("sd")))
+      .withColumn("sd", floorGrid(coalesce(col("__sd0"), lit(0.0)), 1e6))
+      .withColumn("__w", floorGrid(col("n_rows").cast("double") * col("sd"), 1e6))
       .ckptPartitioned()
     val tots = st.agg(
       sum(col("__w").cast(DecimalType(28, 6))).cast("double").as("__wsum"),

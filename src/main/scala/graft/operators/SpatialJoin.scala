@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.expressions.Kernels.floorGrid
 
 /** Grid-bucketed spatial nearest-neighbor join — "which stop is this
   * event closest to": the planar companion of the temporal as-of
@@ -23,7 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object SpatialJoin {
 
-  private def q6(c: Column): Column = floor(c * lit(1e6)) / lit(1e6)
 
   def nearestNeighbor(points: DataFrame, pointId: String, px: String, py: String,
                       sites: DataFrame, siteId: String, sx: String, sy: String,
@@ -76,6 +76,6 @@ object SpatialJoin {
         ord).as("__best"))
       .select(col("point_id"), col("px"), col("py"),
         col("__best.site_id").as("site_id"),
-        q6(sqrt(col("__best.d2"))).as("dist"))
+        floorGrid(sqrt(col("__best.d2")), 1e6).as("dist"))
   }
 }

@@ -499,9 +499,24 @@ class CoreOperatorsSpec extends SparkSpec {
 
   test("driver contract: entry returns rows; registries aligned") {
     assert(SparkEntry.entry(spark).count() > 0)
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert(o.subsetOf(q), s"oracle keys without query: ${o diff q}")
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.distinct.size == names.size,
+      s"duplicate registry names: ${names.diff(names.distinct)}")
+    // SURVEY.md §5.1 lists the rows-only queries: its table and its
+    // header count must both match the registry's RowsOnly set.
+    val survey = java.nio.file.Files.readString(java.nio.file.Paths.get("SURVEY.md"))
+    val section = """(?s)### §5\.1[^\n]*\n(.*?)(?=\n### |\nRound-)""".r
+      .findFirstMatchIn(survey).map(_.group(1))
+      .getOrElse(fail("SURVEY.md has no §5.1 section"))
+    val header = """Exactly these (\d+) registry entries""".r
+      .findFirstMatchIn(section).map(_.group(1).toInt)
+      .getOrElse(fail("§5.1 header count sentence missing"))
+    val table = """(?m)^\| `([a-z0-9_]+)` \|""".r
+      .findAllMatchIn(section).map(_.group(1)).toSet
+    assert(table == SparkEntry.rowsOnly,
+      s"§5.1 only: ${table diff SparkEntry.rowsOnly}; " +
+        s"registry only: ${SparkEntry.rowsOnly diff table}")
+    assert(header == table.size, s"§5.1 header says $header, table lists ${table.size}")
   }
 
   test("saltedJoin equals the plain join under a forced shuffle and spreads the key") {

@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Scd2, Sessionize}
@@ -22,12 +23,20 @@ class InvariantSpec extends SparkSpec {
     (bk, ts, i.toLong, attr)
   }.toDF("bk", "ts", "event_id", "attr")
 
+  /** Every registry query constructed once (eager checkpoints included)
+    * and shared by the two registry-wide plan checks below.
+    */
+  private lazy val built: Map[String, DataFrame] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> (try fn(spark, sf)
+        catch { case e: Throwable => fail(s"$name failed to build: ${e.getMessage}") })
+    }.toMap
+
   test("plan invariants: join-heavy queries never sort-merge or cartesian") {
     // The §4 contract, locked into the suite: dims broadcast, fact
     // shuffles are hash exchanges, and no plan ever degenerates into a
     // SortMergeJoin or CartesianProduct. (PlanAudit prints the full
     // per-query counts; this pins the invariant for the heavy hitters.)
-    val sfDir = sf
     val heavy = Seq("q5_local_supplier", "gold_fct_star", "gold_asof_join",
       "gold_merge_grain", "ana_od_matrix", "svc_map_points",
       "dedup_ngram_jaccard", "dedup_minhash_lsh",
@@ -175,8 +184,7 @@ class InvariantSpec extends SparkSpec {
       // `heavy`.
       "sketch_theta_ops")
     heavy.foreach { name =>
-      val plan = SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.executedPlan.toString
+      val plan = built(name).queryExecution.executedPlan.toString
       if (!smjRowScaleByDesign(name))
         assert(!plan.contains("SortMergeJoin"), s"$name plans a SortMergeJoin")
       assert(!plan.contains("CartesianProduct"), s"$name plans a CartesianProduct")
@@ -233,8 +241,8 @@ class InvariantSpec extends SparkSpec {
             a.name == "date_sk" || a.name == "d"
         case _ => false
       })
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val plan = try fn(spark, sf).queryExecution.sparkPlan
+    val offenders = built.toSeq.sortBy(_._1).flatMap { case (name, df) =>
+      val plan = try df.queryExecution.sparkPlan
         catch { case e: Throwable => fail(s"$name failed to plan: ${e.getMessage}") }
       val unpart = plan.collect {
         case w: WindowExec
